@@ -27,7 +27,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from typing import Callable, Sequence
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -71,19 +71,6 @@ class CheckpointJob:
     def progress(self) -> DataFrame:
         return self.spark.read.parquet(self.progress_dir)
 
-    def progress_remaining(self, df: DataFrame, key_col: str) -> list:
-        """Keys of df with no progress row yet (what a resume would run).
-        Empty list == stage complete.
-
-        This is the standalone AUDIT entry point: it re-derives the key
-        set with a distinct+collect (driver memory O(#distinct keys) —
-        fine for spatial-cell keys, whose cardinality is bounded by the
-        resolution, but don't point it at a high-cardinality key).
-        Callers that just ran run() should read `remaining_keys`
-        instead, which run() already computed without an extra pass."""
-        all_keys = {r[0] for r in df.select(key_col).distinct().collect()}
-        return sorted(all_keys - self.completed_keys())
-
     def _record(self, rows):
         pdf = self.spark.createDataFrame(
             rows,
@@ -114,7 +101,6 @@ class CheckpointJob:
 
         all_keys = [r[0] for r in df.select(key_col).distinct().collect()]
         todo = sorted(set(all_keys) - self.completed_keys())
-        self.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
         done = 0
         batches = [
@@ -130,8 +116,14 @@ class CheckpointJob:
                 for r in sub.groupBy(key_col).count().collect()
             }
             out = transform(sub)
-            # atomic per-key replace: dynamic partition overwrite
-            out.write.mode("overwrite").partitionBy(key_col).parquet(self.output_dir)
+            # atomic per-key replace: dynamic partition overwrite, set on
+            # this write only (the session's mode stays the caller's)
+            (
+                out.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy(key_col)
+                .parquet(self.output_dir)
+            )
             try:
                 n_out = {
                     r[0]: r[1]

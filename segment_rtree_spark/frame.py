@@ -14,7 +14,6 @@ dropping back to raw Spark.
 
 from __future__ import annotations
 
-import pickle
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -22,10 +21,6 @@ from pyspark.sql import DataFrame
 from .layer import PolygonLayer
 
 __all__ = ["SpatialFrame"]
-
-# layers whose pickled pack exceeds this broadcast via the cover-table
-# path instead (conservative fraction of a typical executor heap)
-BROADCAST_LIMIT_BYTES = 256 << 20
 
 
 class SpatialFrame:
@@ -69,12 +64,6 @@ class SpatialFrame:
         pack is small enough, else takes the cell-partitioned path."""
         from .operators.pip_join import pip_join
 
-        if how == "auto":
-            how = (
-                "broadcast"
-                if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-                else "partitioned"
-            )
         return self._wrap(
             pip_join(self.df, layer, how=how, x=self.x, y=self.y, keep=keep, **kw)
         )

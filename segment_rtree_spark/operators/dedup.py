@@ -908,8 +908,8 @@ def label_map(edges: DataFrame,
     Callers fold the mapping onto any frame keyed by node with a LEFT
     join + coalesce(label, node) — at the CALLER's cardinality, and
     map-side when `broadcastable` (the driver union-find fast path).
-    This is the core label_propagate shares with phash_components /
-    crossmodal_components / the multimodal cascade: those operators
+    This is the core label_propagate shares with the *_group_labels
+    operators and the multimodal cascade: those operators
     used to materialize a per-node component frame and shuffle-join
     their row tables against it; folding the sparse mapping directly
     deletes that node-cardinality join (in a realistic corpus the
@@ -1071,37 +1071,32 @@ def label_propagate(nodes: DataFrame, edges: DataFrame,
                     driver_edges: int = 200_000) -> DataFrame:
     """Connected components by min-label propagation: nodes(node) +
     edges(src, dst) [undirected] -> (node, label) with label = the min
-    node id reachable. A thin rejoin over label_map (see there for the
-    driver fast path / distributed loop trade): the sparse mapping
-    folds onto the node list with one left join — map-side when the
-    mapping is driver-sized."""
+    node id reachable. The sparse label_map mapping folded onto the
+    node list (see label_map for the driver fast path / distributed
+    loop trade)."""
     mapping, bc = label_map(edges, max_iter, driver_edges)
-    if mapping is None:
-        return nodes.withColumn("label", F.col("node"))
-    m = F.broadcast(mapping) if bc else mapping
-    return nodes.join(m, "node", "left").select(
-        "node", F.coalesce("label", F.col("node")).alias("label")
-    )
+    nodes = nodes.select("node")
+    return _fold_labels(nodes, nodes["node"], mapping, bc)
 
 
 def phash_components(images: DataFrame, id_col: str = "image_id",
                      phash: str = "phash", max_hamming: int = 8,
                      max_iter: int = 50, n_bands: int = 4,
-                     rep_join: str = "window",
                      hot_threshold: int | None = 4096,
                      max_bucket: int | None = None,
                      drop_observation=None) -> DataFrame:
     """Image near-duplicate clusters: (image_id, component) with
     component = the minimum image id in the cluster.
 
-    The 10^12-image shape, in two levels:
+    The 10^12-image shape, in two levels (phash_group_labels):
       1. byte-identical perceptual hashes collapse FIRST (distinct on
          the 64-bit phash) — a million identical crops become ONE node
          below, so degenerate corpora cannot re-create the quadratic
          bucket problem;
       2. the band join + exact Hamming verify runs over DISTINCT hash
          values only, and min-label propagation clusters the values;
-         each image then inherits the min image id of its cluster.
+         each image then inherits the min image id of its cluster (one
+         window over the group key). NULL hashes are singletons.
 
     Unlike `lsh_components` (bucket connectivity IS the doc-dedup
     semantic), image clusters propagate only through VERIFIED pairs
@@ -1114,67 +1109,22 @@ def phash_components(images: DataFrame, id_col: str = "image_id",
     the cap actually acts here. Unarmed (the default) the observation
     fills with zeros eagerly.
     """
-    all_ph = images.select(F.col(phash).alias("ph"), F.col(id_col))
-    # NULL hashes (upstream decode/hash failures) can't band-join and
-    # would vanish through the inner joins below; they are singleton
-    # clusters by definition and rejoin the output at the end.
-    null_ph = all_ph.filter(F.col("ph").isNull()).select(
-        id_col, F.col(id_col).alias("component")
-    )
-    ph = all_ph.filter(F.col("ph").isNotNull())
-    # one materialization feeds every consumer: the band-join sizing
-    # pass, both pair-join sides, and the component node list — without
-    # it the distinct shuffle re-runs in each branch (and in each of
-    # the sizing/join JOBS, which exchange reuse cannot span)
-    distinct_ph = ph.select("ph").distinct().localCheckpoint(eager=False)
-    pairs = phash_neardup_pairs(
-        distinct_ph.withColumn("pid", F.col("ph")),
-        max_hamming=max_hamming, id_col="pid", phash="ph", n_bands=n_bands,
+    lab = phash_group_labels(
+        images.select(id_col, phash), id_col=id_col, phash=phash,
+        max_hamming=max_hamming, max_iter=max_iter, n_bands=n_bands,
         hot_threshold=hot_threshold, max_bucket=max_bucket,
         drop_observation=drop_observation,
     )
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    mapping, bc = label_map(edges, max_iter)
-    # rep_join picks the representative-assignment physical shape:
-    #   'window' (default): one shuffle on the cluster label, min via
-    #     window — fewest stages, but a giant cluster's rows all pass
-    #     through ONE task (rows are narrow, so tolerable far past the
-    #     band-join skew point);
-    #   'broadcast': groupBy partial-agg shrinks each cluster to one
-    #     (label, min-id) row map-side, the min table broadcasts
-    #     back — NO task ever holds a whole cluster, the shape for
-    #     corpora whose largest cluster is itself web-scale. The
-    #     broadcast is one narrow row PER CLUSTER: fine up to ~10^7
-    #     clusters; a mostly-unique corpus (cluster count ~ N) should
-    #     keep the window default, whose per-task rows are bounded by
-    #     the LARGEST cluster instead. The labelled frame checkpoints
-    #     because both the agg and the rejoin consume it.
-    # The hash->label fold left-joins the SPARSE edge-touched mapping
-    # at image cardinality (coalesce to the hash itself for untouched
-    # nodes) — the earlier form materialized a per-distinct-hash
-    # component frame via label_propagate and shuffle-joined the
-    # image rows against it; the sparse fold is map-side whenever the
-    # edge set fit the driver union-find path.
-    labelled = _fold_labels(
-        ph, F.col("ph"), mapping, bc
-    ).select(id_col, "label")
-    if rep_join == "broadcast":
-        labelled = labelled.localCheckpoint(eager=False)
-        mins = labelled.groupBy("label").agg(F.min(id_col).alias("component"))
-        return (
-            labelled.join(F.broadcast(mins), "label")
-            .select(id_col, "component")
-            .union(null_ph)
-        )
-    if rep_join != "window":
-        raise ValueError(f"rep_join must be 'window' or 'broadcast', got {rep_join!r}")
+    return _min_id_per_group(lab, id_col, "_plabel")
+
+
+def _min_id_per_group(lab: DataFrame, id_col: str, key: str) -> DataFrame:
+    """(id_col, component = min id_col over the rows sharing `key`) —
+    the per-row form of a *_group_labels cluster key."""
     from pyspark.sql import Window
 
-    w = Window.partitionBy("label")
-    return (
-        labelled.select(id_col, F.min(id_col).over(w).alias("component"))
-        .union(null_ph)
-    )
+    w = Window.partitionBy(key)
+    return lab.select(id_col, F.min(id_col).over(w).alias("component"))
 
 
 def simhash64(docs: DataFrame, id_col: str = "doc_id", text: str = "text",
@@ -1543,8 +1493,7 @@ def _crossmodal_node_edges(nodes: DataFrame, max_hamming: int,
                            max_bucket: int | None,
                            drop_observation) -> DataFrame:
     """Verified crossmodal edges over a DISTINCT (nid, cap, ph) node
-    frame — the internal pair generator crossmodal_components /
-    crossmodal_group_labels share.
+    frame — crossmodal_group_labels' internal pair generator.
 
     The node key nid = cap || '|' || ph embeds the caption, so exact
     caption equality can be checked on the PAIR STREAM from the two
@@ -1642,7 +1591,7 @@ def crossmodal_group_labels(images: DataFrame, id_col: str = "image_id",
 def crossmodal_components(images: DataFrame, id_col: str = "image_id",
                           phash: str = "phash", caption: str = "caption",
                           max_hamming: int = 8, max_iter: int = 50,
-                          n_bands: int = 4, rep_join: str = "window",
+                          n_bands: int = 4,
                           hot_threshold: int | None = 4096,
                           max_bucket: int | None = None,
                           drop_observation=None) -> DataFrame:
@@ -1654,64 +1603,21 @@ def crossmodal_components(images: DataFrame, id_col: str = "image_id",
     and image modalities.
 
     Same two-level 10^12 shape as phash_components, with the node
-    collapsed one level further: byte-identical (caption, phash) PAIRS
-    dedup first (a million exact re-posts of one captioned image
-    become ONE node), then the caption-folded band join + min-label
-    propagation run over distinct nodes only, and each image inherits
-    its cluster's min id. Because edges never cross captions (the fold
-    makes cross-caption candidates impossible), every cluster lives
-    inside one caption group by construction. The node key is
-    caption || '|' || phash — injective (the phash suffix contains no
-    separator, so the LAST '|' always splits unambiguously) and
-    orderable, which is all min-label propagation needs; cluster
+    collapsed one level further (crossmodal_group_labels):
+    byte-identical (caption, phash) PAIRS dedup first (a million exact
+    re-posts of one captioned image become ONE node), then the
+    caption-folded band join + min-label propagation run over distinct
+    nodes only, and each image inherits its cluster's min id (one
+    window over the group key). Because edges never cross captions
+    (the fold makes cross-caption candidates impossible), every
+    cluster lives inside one caption group by construction. Cluster
     OUTPUT labels are image ids, never node keys. NULL phash or NULL
-    caption rows are singleton clusters (they cannot band-join) and
-    rejoin the output at the end.
+    caption rows are singleton clusters (they cannot band-join).
     """
-    all_rows = images.select(
-        F.col(id_col), F.col(phash).alias("ph"), F.col(caption).alias("cap")
+    lab = crossmodal_group_labels(
+        images.select(id_col, phash, caption), id_col=id_col, phash=phash,
+        caption=caption, max_hamming=max_hamming, max_iter=max_iter,
+        n_bands=n_bands, hot_threshold=hot_threshold,
+        max_bucket=max_bucket, drop_observation=drop_observation,
     )
-    null_rows = all_rows.filter(
-        F.col("ph").isNull() | F.col("cap").isNull()
-    ).select(id_col, F.col(id_col).alias("component"))
-    rows = all_rows.filter(F.col("ph").isNotNull() & F.col("cap").isNotNull())
-    # one materialization feeds the sizing pass, both join sides and
-    # the node list (see phash_components)
-    nodes = (
-        rows.select("cap", "ph").distinct()
-        .select(
-            F.concat_ws("|", "cap", F.col("ph").cast("string")).alias("nid"),
-            "cap", "ph",
-        )
-        .localCheckpoint(eager=False)
-    )
-    edges = _crossmodal_node_edges(
-        nodes, max_hamming, n_bands, hot_threshold, max_bucket,
-        drop_observation,
-    )
-    mapping, bc = label_map(edges, max_iter)
-    # sparse fold at row cardinality (see phash_components): untouched
-    # node keys coalesce to themselves, no per-node component frame
-    labelled = _fold_labels(
-        rows.withColumn(
-            "nid", F.concat_ws("|", "cap", F.col("ph").cast("string"))
-        ),
-        F.col("nid"), mapping, bc,
-    ).select(id_col, "label")
-    if rep_join == "broadcast":
-        labelled = labelled.localCheckpoint(eager=False)
-        mins = labelled.groupBy("label").agg(F.min(id_col).alias("component"))
-        return (
-            labelled.join(F.broadcast(mins), "label")
-            .select(id_col, "component")
-            .union(null_rows)
-        )
-    if rep_join != "window":
-        raise ValueError(f"rep_join must be 'window' or 'broadcast', got {rep_join!r}")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("label")
-    return (
-        labelled.select(id_col, F.min(id_col).over(w).alias("component"))
-        .union(null_rows)
-    )
+    return _min_id_per_group(lab, id_col, "_xlabel")

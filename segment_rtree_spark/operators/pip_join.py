@@ -47,6 +47,24 @@ __all__ = [
     "pip_join",
 ]
 
+# layers whose pickled pack exceeds this take the cell-partitioned
+# path instead of shipping to every executor (conservative fraction
+# of a typical executor heap)
+BROADCAST_LIMIT_BYTES = 256 << 20
+
+
+def resolve_how(layer: PolygonLayer, how: str) -> str:
+    """The PIP strategy `how` names: 'auto' is 'broadcast' when the
+    pickled layer pack fits BROADCAST_LIMIT_BYTES, else 'partitioned';
+    any other value passes through unchanged."""
+    if how != "auto":
+        return how
+    import pickle
+
+    if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES:
+        return "broadcast"
+    return "partitioned"
+
 
 def _result_schema(points: DataFrame, keep: Sequence[str]) -> str:
     by_name = {f.name: f.dataType.simpleString() for f in points.schema.fields}
@@ -487,6 +505,7 @@ def pip_join(
     how: str = "broadcast",
     **kw,
 ) -> DataFrame:
+    how = resolve_how(layer, how)
     if how == "broadcast":
         kw.pop("res", None)
         kw.pop("salt_threshold", None)
@@ -494,4 +513,6 @@ def pip_join(
         return pip_join_broadcast(points, layer, **kw)
     if how == "partitioned":
         return pip_join_partitioned(points, layer, **kw)
-    raise ValueError(f"how must be 'broadcast' or 'partitioned', got {how!r}")
+    raise ValueError(
+        f"how must be 'broadcast', 'partitioned' or 'auto', got {how!r}"
+    )

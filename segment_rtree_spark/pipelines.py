@@ -19,7 +19,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from .layer import PolygonLayer
-from .operators.pip_join import pip_count_broadcast
+from .operators.pip_join import pip_count_broadcast, resolve_how
 
 __all__ = [
     "curate_images",
@@ -61,7 +61,7 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     thread through to the composed operators.
 
     `max_bucket` / `drop_observation` thread to the near-dup band
-    join (phash_components): pass a pyspark Observation and a 100 TB
+    join (phash_group_labels): pass a pyspark Observation and a 100 TB
     curation run can read dropped_buckets / dropped_rows directly
     from the pipeline call — filled EAGERLY at build (zeros when the
     cap is unarmed), so observation.get never blocks and never loses
@@ -74,16 +74,6 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     # few dozen bytes/row instead of the full payload (at the scan,
     # parquet column pruning makes this free).
     narrow = images.select(id_col, caption, phash, y, x)
-    if how == "auto":
-        import pickle
-
-        from .frame import BROADCAST_LIMIT_BYTES
-
-        how = (
-            "broadcast"
-            if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-            else "partitioned"
-        )
     # caption+phash ride THROUGH the PIP kernel (keep=), and on the
     # broadcast path the containment count is computed in-kernel
     # (pip_count_broadcast), so the survivor stage shuffles NOTHING —
@@ -92,9 +82,9 @@ def curate_images(images: DataFrame, layer: PolygonLayer,
     # and the final representative join); without materialization
     # each one would re-execute the PIP join. localCheckpoint runs it
     # once (on a cluster: .checkpoint() against the durable dir).
-    keep = [id_col, caption, phash]
     ok = _survivors_multimodal(
-        narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
+        narrow, layer, min_caption_tokens, how, [id_col, caption, phash],
+        id_col, caption, x, y,
     )
     if materialize:
         # (materialize=False keeps the full lineage — used by the plan
@@ -186,49 +176,67 @@ def curate_images_checkpointed(images: DataFrame, layer: PolygonLayer,
     is NOT filled (observation.get would block), so read it only when
     the curated frame is returned.
     """
-    from .checkpoint import CheckpointJob
-    from .operators.tile_ops import assign_tiles
-
-    spark = images.sparkSession
-    narrow = assign_tiles(
-        images.select(id_col, caption, phash, y, x), res=res, y=y, x=x
+    done, ok = _checkpointed_survivors(
+        images.select(id_col, caption, phash, y, x), layer,
+        [id_col, caption, phash], root, job_id, res, keys_per_batch,
+        max_batches, min_caption_tokens, id_col, caption, x, y,
     )
-    job = CheckpointJob(spark, job_id, root)
-
-    def survivors(batch: DataFrame) -> DataFrame:
-        # same zero-shuffle shape as curate_images: payload rides the
-        # kernel and the containment count is computed in-kernel (cell
-        # kept — it is the checkpoint partition key)
-        return _survivors_multimodal(
-            batch, layer, min_caption_tokens, "broadcast",
-            [id_col, caption, phash, "cell"], id_col, caption, x, y,
-        )
-
-    done = job.run(narrow, "cell", survivors,
-                   keys_per_batch=keys_per_batch, max_batches=max_batches)
-    # run() already computed the remaining key set — re-deriving it via
-    # progress_remaining() would repeat the same distinct+collect pass
-    # over the full input every invocation
-    if job.remaining_keys:
+    if ok is None:
         return done, None
-
-    try:
-        ok = job.output().drop("cell")
-    except AnalysisException:
-        # every key produced zero survivors: the output dir holds no
-        # parquet files, so the read cannot infer a schema — the
-        # correct result is an EMPTY curated frame, not an error
-        # (schema from the transform's plan; no action runs). ONLY
-        # AnalysisException means "nothing to read" — permissions,
-        # corrupt footers, and transient FS failures propagate instead
-        # of masquerading as an empty result
-        ok = spark.createDataFrame(
-            [], survivors(narrow.limit(0)).schema
-        ).drop("cell")
     return done, _collapse_by_phash(
         ok, id_col, caption, phash, max_hamming, n_bands,
         hot_threshold, max_bucket, drop_observation,
     )
+
+
+def _checkpointed_survivors(narrow: DataFrame, layer: PolygonLayer,
+                            keep: list, root: str, job_id: str, res: int,
+                            keys_per_batch: int, max_batches: int | None,
+                            min_caption_tokens: int, id_col: str,
+                            caption: str, x: str, y: str):
+    """The resumable survivor stage every *_checkpointed form shares:
+    tile `narrow` by the res-`res` quadtree cell of the geotag, run
+    _survivors_multimodal (broadcast PIP, in-kernel containment count,
+    caption filter) per key batch under a CheckpointJob, and read the
+    survivors back once every key has committed.
+
+    Returns (n_keys_processed, survivors | None): None while keys
+    remain (the caller returns early; calling again with the same
+    root/job_id resumes). The survivor frame carries `keep` plus
+    n_regions; the cell column (the checkpoint partition key) is
+    dropped."""
+    from .checkpoint import CheckpointJob
+    from .operators.tile_ops import assign_tiles
+
+    spark = narrow.sparkSession
+    tiled = assign_tiles(narrow, res=res, y=y, x=x)
+    keep = [*keep, "cell"]
+
+    def survivors(batch: DataFrame) -> DataFrame:
+        return _survivors_multimodal(
+            batch, layer, min_caption_tokens, "broadcast", keep,
+            id_col, caption, x, y,
+        )
+
+    job = CheckpointJob(spark, job_id, root)
+    done = job.run(tiled, "cell", survivors,
+                   keys_per_batch=keys_per_batch, max_batches=max_batches)
+    # run() already computed the remaining key set: no second
+    # distinct+collect pass over the full input
+    if job.remaining_keys:
+        return done, None
+    try:
+        ok = job.output()
+    except AnalysisException:
+        # every key produced zero survivors: the output dir holds no
+        # parquet files, so the read cannot infer a schema — the
+        # correct result is an EMPTY survivor frame, not an error
+        # (schema from the transform's plan; no action runs). ONLY
+        # AnalysisException means "nothing to read" — permissions,
+        # corrupt footers, and transient FS failures propagate instead
+        # of masquerading as an empty result
+        ok = spark.createDataFrame([], survivors(tiled.limit(0)).schema)
+    return done, ok.drop("cell")
 
 
 # -- multimodal curation (exact -> crossmodal -> optional embedding) ------
@@ -257,7 +265,7 @@ def _multimodal_cluster(ok: DataFrame,
          rides forward as n_exact.
       2. CROSSMODAL: identical caption AND phash Hamming <=
          max_hamming, via the caption-folded band join + min-label
-         propagation (crossmodal_components — distinct (caption,
+         propagation (crossmodal_group_labels — distinct (caption,
          phash) nodes, so degenerate corpora stay linear). Cluster
          sizes accumulate: each crossmodal cluster's size is the SUM
          of its members' exact-group sizes.
@@ -369,7 +377,9 @@ def _survivors_multimodal(narrow: DataFrame, layer: PolygonLayer,
     so the survivor stage has ZERO shuffle; image ids are unique per
     row (the curation contract), so this equals the groupBy-on-hits
     form exactly. Partitioned path: the hits fan out across cell
-    tasks, so the per-image aggregate still needs its one groupBy."""
+    tasks, so the per-image aggregate still needs its one groupBy.
+    how='auto' resolves by the layer's pickled size (resolve_how)."""
+    how = resolve_how(layer, how)
     if how == "broadcast":
         surv = pip_count_broadcast(narrow, layer, x=x, y=y, keep=keep)
     else:
@@ -383,6 +393,23 @@ def _survivors_multimodal(narrow: DataFrame, layer: PolygonLayer,
     return surv.filter(
         F.size(F.split(F.col(caption), " ")) >= min_caption_tokens
     )
+
+
+def _narrow_multimodal(images: DataFrame, id_col: str, caption: str,
+                       phash: str, content: str, embedding: str | None,
+                       x: str, y: str):
+    """(narrow projection, survivor columns to keep) for the multimodal
+    forms: the content md5 is computed HERE, map-side at the scan, so
+    the payload column never reaches a shuffle."""
+    cols = [
+        F.col(id_col), F.col(caption), F.col(phash), F.col(y), F.col(x),
+        F.coalesce(F.md5(F.col(content)), F.col(id_col)).alias("_content"),
+    ]
+    keep = [id_col, caption, phash, "_content"]
+    if embedding is not None:
+        cols.append(F.col(embedding))
+        keep.append(embedding)
+    return images.select(*cols), keep
 
 
 def curate_multimodal(images: DataFrame, layer: PolygonLayer,
@@ -429,25 +456,9 @@ def curate_multimodal(images: DataFrame, layer: PolygonLayer,
     join; `embed_max_bucket` / `embed_drop_observation` to the
     embedding bucket join — one pipeline call exposes every stage's
     drop counts (filled eagerly at build; zeros when unarmed)."""
-    cols = [
-        F.col(id_col), F.col(caption), F.col(phash), F.col(y), F.col(x),
-        F.coalesce(F.md5(F.col(content)), F.col(id_col)).alias("_content"),
-    ]
-    keep = [id_col, caption, phash, "_content"]
-    if embedding is not None:
-        cols.append(F.col(embedding))
-        keep.append(embedding)
-    narrow = images.select(*cols)
-    if how == "auto":
-        import pickle
-
-        from .frame import BROADCAST_LIMIT_BYTES
-
-        how = (
-            "broadcast"
-            if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-            else "partitioned"
-        )
+    narrow, keep = _narrow_multimodal(
+        images, id_col, caption, phash, content, embedding, x, y
+    )
     ok = _survivors_multimodal(
         narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
     )
@@ -504,38 +515,15 @@ def curate_multimodal_checkpointed(images: DataFrame, layer: PolygonLayer,
     curate_multimodal() exactly when complete. Drop observations are
     only filled on the completing invocation (see
     curate_images_checkpointed)."""
-    from .checkpoint import CheckpointJob
-    from .operators.tile_ops import assign_tiles
-
-    spark = images.sparkSession
-    cols = [
-        F.col(id_col), F.col(caption), F.col(phash), F.col(y), F.col(x),
-        F.coalesce(F.md5(F.col(content)), F.col(id_col)).alias("_content"),
-    ]
-    keep = [id_col, caption, phash, "_content", "cell"]
-    if embedding is not None:
-        cols.append(F.col(embedding))
-        keep.append(embedding)
-    narrow = assign_tiles(images.select(*cols), res=res, y=y, x=x)
-    job = CheckpointJob(spark, job_id, root)
-
-    def survivors(batch: DataFrame) -> DataFrame:
-        return _survivors_multimodal(
-            batch, layer, min_caption_tokens, "broadcast", keep,
-            id_col, caption, x, y,
-        )
-
-    done = job.run(narrow, "cell", survivors,
-                   keys_per_batch=keys_per_batch, max_batches=max_batches)
-    if job.remaining_keys:
+    narrow, keep = _narrow_multimodal(
+        images, id_col, caption, phash, content, embedding, x, y
+    )
+    done, ok = _checkpointed_survivors(
+        narrow, layer, keep, root, job_id, res, keys_per_batch,
+        max_batches, min_caption_tokens, id_col, caption, x, y,
+    )
+    if ok is None:
         return done, None
-    try:
-        ok = job.output().drop("cell")
-    except AnalysisException:
-        # zero survivors everywhere: empty frame with the right schema
-        ok = spark.createDataFrame(
-            [], survivors(narrow.limit(0)).schema
-        ).drop("cell")
     return done, _multimodal_cluster(
         ok, max_hamming, n_bands, hot_threshold, max_bucket,
         drop_observation, embedding, embed_threshold, embed_n_bits,
@@ -572,7 +560,7 @@ def curate_images_against(new_images: DataFrame, corpus: DataFrame,
          two-sided tiling, cost |batch| x collision rate, never
          |corpus|^2 — then one broadcast-friendly anti join on the
          matched new ids);
-      3. dedup the REMAINDER internally (phash_components over the
+      3. dedup the REMAINDER internally (phash_group_labels over the
          fresh survivors only) and keep one representative per new
          cluster.
 
@@ -585,24 +573,27 @@ def curate_images_against(new_images: DataFrame, corpus: DataFrame,
     band join (corpus-side drops observed, the phash_neardup_against
     contract)."""
     narrow = new_images.select(id_col, caption, phash, y, x)
-    keep = [id_col, caption, phash]
-    if how == "auto":
-        import pickle
-
-        from .frame import BROADCAST_LIMIT_BYTES
-
-        how = (
-            "broadcast"
-            if len(pickle.dumps(layer)) <= BROADCAST_LIMIT_BYTES
-            else "partitioned"
-        )
     ok = _survivors_multimodal(
-        narrow, layer, min_caption_tokens, how, keep, id_col, caption, x, y
+        narrow, layer, min_caption_tokens, how, [id_col, caption, phash],
+        id_col, caption, x, y,
     )
     if materialize:
-        # ok feeds the against-join, the anti join, the internal
-        # components AND the representative rejoin
+        # ok feeds the against-join, the anti join and the internal
+        # collapse
         ok = ok.localCheckpoint()
+    return _against_tail(
+        ok, corpus, materialize, max_hamming, n_bands, hot_threshold,
+        max_bucket, drop_observation, id_col, caption, phash,
+    )
+
+
+def _against_tail(ok: DataFrame, corpus: DataFrame, materialize: bool,
+                  max_hamming: int, n_bands: int, hot_threshold: int,
+                  max_bucket: int | None, drop_observation,
+                  id_col: str, caption: str, phash: str) -> DataFrame:
+    """The global tail of both curate_images_against forms: anti-join
+    away every survivor that near-dups the kept corpus, then collapse
+    the fresh remainder to one representative per internal cluster."""
     from .operators.dedup import phash_neardup_against
 
     matches = phash_neardup_against(
@@ -646,44 +637,15 @@ def curate_images_against_checkpointed(new_images: DataFrame,
     like curate_images_checkpointed; the corpus anti-join + internal
     dedup run once stage 1 completes. Returns (n_keys_processed,
     DataFrame | None); matches curate_images_against() when complete."""
-    from .checkpoint import CheckpointJob
-    from .operators.dedup import phash_neardup_against
-    from .operators.tile_ops import assign_tiles
-
-    spark = new_images.sparkSession
-    narrow = assign_tiles(
-        new_images.select(id_col, caption, phash, y, x), res=res, y=y, x=x
+    done, ok = _checkpointed_survivors(
+        new_images.select(id_col, caption, phash, y, x), layer,
+        [id_col, caption, phash], root, job_id, res, keys_per_batch,
+        max_batches, min_caption_tokens, id_col, caption, x, y,
     )
-    keep = [id_col, caption, phash, "cell"]
-    job = CheckpointJob(spark, job_id, root)
-
-    def survivors(batch: DataFrame) -> DataFrame:
-        return _survivors_multimodal(
-            batch, layer, min_caption_tokens, "broadcast", keep,
-            id_col, caption, x, y,
-        )
-
-    done = job.run(narrow, "cell", survivors,
-                   keys_per_batch=keys_per_batch, max_batches=max_batches)
-    if job.remaining_keys:
+    if ok is None:
         return done, None
-    try:
-        ok = job.output().drop("cell")
-    except AnalysisException:
-        ok = spark.createDataFrame(
-            [], survivors(narrow.limit(0)).schema
-        ).drop("cell")
-    ok = ok.localCheckpoint(eager=False)
-    matches = phash_neardup_against(
-        ok, corpus.select(id_col, phash), max_hamming=max_hamming,
-        id_col=id_col, phash=phash, n_bands=n_bands,
-        max_bucket=max_bucket, hot_threshold=hot_threshold,
-        drop_observation=drop_observation,
-    )
-    fresh = ok.join(
-        matches.select(F.col("new_id").alias(id_col)), id_col, "left_anti"
-    ).localCheckpoint(eager=False)
-    return done, _collapse_by_phash(
-        fresh, id_col, caption, phash, max_hamming, n_bands,
-        hot_threshold, max_bucket,
+    return done, _against_tail(
+        ok.localCheckpoint(eager=False), corpus, True, max_hamming,
+        n_bands, hot_threshold, max_bucket, drop_observation,
+        id_col, caption, phash,
     )

@@ -55,6 +55,26 @@ def test_metrics_lineage(spark, data, tmp_path):
     assert (prog["n_out"] == 1).all()
 
 
+def test_run_leaves_session_overwrite_mode(spark, data, tmp_path):
+    """run() replaces only the partitions it writes, and sets dynamic
+    overwrite on its own write: the session's partitionOverwriteMode
+    is unchanged afterwards, so the caller's later overwrite writes
+    keep their static semantics."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    spark.conf.set(key, "STATIC")
+    root = str(tmp_path / "d")
+    CheckpointJob(spark, "all", root).run(data, "key", transform)
+    assert spark.conf.get(key) == "STATIC"
+    # a second job over keys 0..4 only: keys 5..9 written by the first
+    # job must survive the overwrite
+    CheckpointJob(spark, "half", root).run(
+        data.filter(F.col("key") < 5), "key", transform
+    )
+    assert spark.conf.get(key) == "STATIC"
+    keys = {r["key"] for r in CheckpointJob(spark, "all", root).output().collect()}
+    assert keys == set(range(10))
+
+
 def test_submit_job_demo_smoke():
     """The spark-submit production entry stays runnable end to end:
     --demo synthesizes input, runs the checkpointed tile+PIP pipeline,

@@ -403,22 +403,6 @@ def test_ngram_auto_df_guard(spark):
     assert ngram_jaccard_pairs(small, threshold=0.01).count() == 50 * 49 // 2
 
 
-def test_phash_components_rep_join_broadcast(spark):
-    """rep_join='broadcast' == the window default, and its plan really
-    broadcasts the per-cluster min table (no single-task window over a
-    giant cluster)."""
-    from segment_rtree_spark.operators.dedup import phash_components
-    from segment_rtree_spark.synth import images_df_arith
-
-    imgs = images_df_arith(spark, 300).select("image_id", "phash")
-    w = sorted(map(tuple, phash_components(imgs, max_hamming=16).collect()))
-    b = phash_components(imgs, max_hamming=16, rep_join="broadcast")
-    assert sorted(map(tuple, b.collect())) == w
-    jvm = spark.sparkContext._jvm
-    plan = jvm.PythonSQLUtils.explainString(b._jdf.queryExecution(), "formatted")
-    assert "BroadcastHashJoin" in plan
-
-
 def test_tiled_join_random_parity(spark):
     """Randomized bucket structures: the tiled two-sided join equals
     the plain equi-join pair set for every hot/cold mix (tiny
@@ -687,39 +671,36 @@ def test_crossmodal_components_bruteforce(spark):
         rows, "image_id string, caption string, phash long"
     )
 
-    for rep_join in ("window", "broadcast"):
-        got = {
-            (r["image_id"], r["component"])
-            for r in crossmodal_components(
-                df, max_hamming=8, rep_join=rep_join
-            ).collect()
-        }
+    got = {
+        (r["image_id"], r["component"])
+        for r in crossmodal_components(df, max_hamming=8).collect()
+    }
 
-        # brute force
-        parent = {}
+    # brute force
+    parent = {}
 
-        def find(x):
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
-        valid = [(i, c, p) for i, c, p in rows if c is not None and p is not None]
-        for a in range(len(valid)):
-            for b in range(a + 1, len(valid)):
-                ia, ca, pa = valid[a]
-                ib, cb, pb = valid[b]
-                if ca == cb and bin(pa ^ pb).count("1") <= 8:
-                    parent[find(ia)] = find(ib)
-        comp = {}
-        for i, _, _ in valid:
-            comp.setdefault(find(i), []).append(i)
-        want = {
-            (i, min(members))
-            for members in comp.values()
-            for i in members
-        }
-        want |= {("iNULL1", "iNULL1"), ("iNULL2", "iNULL2")}
-        assert got == want
-        # the seeded corpus must actually exercise multi-row clusters
-        assert len({c for _, c in want}) < len(want)
+    valid = [(i, c, p) for i, c, p in rows if c is not None and p is not None]
+    for a in range(len(valid)):
+        for b in range(a + 1, len(valid)):
+            ia, ca, pa = valid[a]
+            ib, cb, pb = valid[b]
+            if ca == cb and bin(pa ^ pb).count("1") <= 8:
+                parent[find(ia)] = find(ib)
+    comp = {}
+    for i, _, _ in valid:
+        comp.setdefault(find(i), []).append(i)
+    want = {
+        (i, min(members))
+        for members in comp.values()
+        for i in members
+    }
+    want |= {("iNULL1", "iNULL1"), ("iNULL2", "iNULL2")}
+    assert got == want
+    # the seeded corpus must actually exercise multi-row clusters
+    assert len({c for _, c in want}) < len(want)

@@ -2,6 +2,7 @@
 stage's value-level correctness is oracled via the curate_images
 registry query)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -96,21 +97,36 @@ def test_curate_checkpointed_kill_resume_matches_oneshot(spark, tmp_path):
     assert final3.count() == len(got)
 
 
-def test_curate_checkpointed_all_empty(spark, tmp_path):
+@pytest.mark.parametrize("form", ["images", "multimodal", "against"])
+def test_curate_checkpointed_all_empty(spark, tmp_path, form):
     """Every key producing zero survivors must yield an EMPTY curated
-    frame, not an unreadable output dir (ADVICE r3)."""
+    frame, not an unreadable output dir (ADVICE r3) — in every
+    checkpointed form, so each global tail (phash collapse, multimodal
+    cascade, corpus anti join + collapse) runs on an empty survivor
+    set."""
     from pyspark.sql import functions as F
 
-    from segment_rtree_spark.pipelines import curate_images_checkpointed
+    from segment_rtree_spark import pipelines
     from segment_rtree_spark.plans.entry_queries import entry_layer
     from segment_rtree_spark.synth import images_df_arith
 
     imgs = images_df_arith(spark, 60, skew_frac=0.1).withColumn(
         "caption", F.lit("x")
     )
-    done, curated = curate_images_checkpointed(
-        imgs, entry_layer(), str(tmp_path / "job"), min_caption_tokens=99
-    )
+    root = str(tmp_path / "job")
+    if form == "images":
+        done, curated = pipelines.curate_images_checkpointed(
+            imgs, entry_layer(), root, min_caption_tokens=99
+        )
+    elif form == "multimodal":
+        done, curated = pipelines.curate_multimodal_checkpointed(
+            imgs, entry_layer(), root, min_caption_tokens=99
+        )
+    else:
+        done, curated = pipelines.curate_images_against_checkpointed(
+            imgs, imgs.limit(10), entry_layer(), root, min_caption_tokens=99
+        )
+    assert done > 0
     assert curated is not None
     assert curated.count() == 0
     assert {"image_id", "caption", "n_regions", "cluster_size"} <= set(curated.columns)
